@@ -44,8 +44,9 @@ from sonar_spark.operators.features import (  # noqa: E402
     frame_features_arrow,
 )
 from sonar_spark.operators.fingerprint import (  # noqa: E402
-    lsh_candidate_pairs,
     minhash_fingerprints,
+    near_dup_components,
+    near_dup_pairs,
     shingle_hash_table,
     simhash_near_duplicates,
 )
@@ -338,7 +339,7 @@ def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.where(F.col("vec_id") < 8)
     scored = allpairs_cosine(
-        qs, f"{sf_dir}/embeddings.parquet", threshold=-1.0, directed=True
+        qs, f"{sf_dir}/embeddings.parquet", threshold=None, directed=True
     ).select(
         F.col("id_a").alias("query_id"),
         F.col("id_b").alias("neighbor_id"),
@@ -407,6 +408,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a deterministic 1000-doc slice so the exact check stays cheap at
     # any sf (the scale path for full corpora is LSH candidates +
     # exact verification on survivors)
+    from sonar_spark.functions.arrays import jaccard_exact
+
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 1000)
     # r6: hashed shingle sets from the Arrow kernel — the pairwise
     # intersect/union then runs over 8-byte elements instead of
@@ -428,9 +431,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_b"), "source", F.col("sh").alias("sh_b")
     )
     p = a.join(b, "source").where(F.col("doc_a") != F.col("doc_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
+    jac = jaccard_exact(F.col("sh_a"), F.col("sh_b"))
     scored = p.select("doc_a", "doc_b", jac.alias("j"))
     top = topk_per_group(
         scored, "doc_a", [F.col("j").desc(), F.col("doc_b").asc()], 1
@@ -491,31 +492,28 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token table + deterministic near-dup copies of ~10% of docs
-    (tokens minus the last 3) — planted dedup workload. The planting
-    rule (doc_id % 10 == 0, n_tok > 3) is SQL-replicable so DuckDB
-    oracles can reconstruct the corpus.  r6: _par-parallelized at the
-    scan so the tokenization and every kernel downstream (minhash,
-    shingles, frame features) runs at session parallelism instead of
-    on the single-row-group file's 1-task scan."""
-    base = to_token_table(_par(spark, _t(spark, sf_dir, "documents")))
-    # n_tok > 3 guard: F.slice needs a non-negative length
-    dups = base.where(
-        (F.col("doc_id").cast("long") % 10 == 0) & (F.col("n_tok") > 3)
-    ).select(
+def _plant_dups(base: DataFrame, arr: str) -> DataFrame:
+    """base + the planted-dup rows of the dedup workloads: each doc
+    with doc_id % 10 == 0 and more than 3 elements in `arr` gets a
+    near-dup `<id>_dup` (arr minus its last 3 elements), each doc with
+    doc_id % 10 == 5 an exact copy `<id>_copy` (the identity-recall
+    workload of the simhash pigeonhole guarantee).  The rule is
+    SQL-replicable so DuckDB oracles can reconstruct the corpus.  A
+    token table's n_tok column is cut with its array."""
+    n = F.col("n_tok") if "n_tok" in base.columns else F.size(arr)
+    cut = {
+        arr: F.slice(F.col(arr), 1, n - 3).alias(arr),
+        "n_tok": (n - 3).alias("n_tok"),
+    }
+    rest = [c for c in base.columns if c != "doc_id"]
+    mod10 = F.col("doc_id").cast("long") % 10
+    # n > 3 guard: F.slice needs a non-negative length
+    dups = base.where((mod10 == 0) & (n > 3)).select(
         F.concat(F.col("doc_id"), F.lit("_dup")).alias("doc_id"),
-        F.slice(F.col("tokens"), 1, F.col("n_tok") - 3).alias("tokens"),
-        (F.col("n_tok") - 3).alias("n_tok"),
-        F.col("source"),
+        *[cut.get(c, c) for c in rest],
     )
-    # exact copies (doc_id % 10 == 5): identity-recall workload for
-    # the simhash pigeonhole guarantee
-    copies = base.where(F.col("doc_id").cast("long") % 10 == 5).select(
-        F.concat(F.col("doc_id"), F.lit("_copy")).alias("doc_id"),
-        "tokens",
-        "n_tok",
-        "source",
+    copies = base.where(mod10 == 5).select(
+        F.concat(F.col("doc_id"), F.lit("_copy")).alias("doc_id"), *rest
     )
     # coalesce (narrow, no shuffle): the 3-branch union of a
     # _par'd scan would otherwise carry 3x parallelism partitions
@@ -523,8 +521,22 @@ def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         base.unionByName(dups)
         .unionByName(copies)
-        .coalesce(spark.sparkContext.defaultParallelism)
+        .coalesce(base.sparkSession.sparkContext.defaultParallelism)
     )
+
+
+def _dup_corpus(
+    spark: SparkSession, sf_dir: str, tokenize=to_token_table
+) -> DataFrame:
+    """Token table (`tokenize`: to_token_table, or
+    to_token_length_table for oracle-recomputable values) + the
+    planted near-dup and exact copies of _plant_dups.  r6:
+    _par-parallelized at the scan so the tokenization and every
+    kernel downstream (minhash, shingles, frame features) runs at
+    session parallelism instead of on the single-row-group file's
+    1-task scan."""
+    base = tokenize(_par(spark, _t(spark, sf_dir, "documents")))
+    return _plant_dups(base, "tokens")
 
 
 def _dup_corpus_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -536,23 +548,7 @@ def _dup_corpus_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         F.split(F.trim(F.col("text")), r"\s+").alias("words"),
     )
-    dups = base.where(
-        (F.col("doc_id").cast("long") % 10 == 0) & (F.size("words") > 3)
-    ).select(
-        F.concat(F.col("doc_id"), F.lit("_dup")).alias("doc_id"),
-        F.slice(F.col("words"), 1, F.size("words") - 3).alias("words"),
-    )
-    copies = base.where(F.col("doc_id").cast("long") % 10 == 5).select(
-        F.concat(F.col("doc_id"), F.lit("_copy")).alias("doc_id"), "words"
-    )
-    # coalesce (narrow, no shuffle): the 3-branch union of a
-    # _par'd scan would otherwise carry 3x parallelism partitions
-    # through every downstream stage (96 tiny tasks per stage)
-    return (
-        base.unionByName(dups)
-        .unionByName(copies)
-        .coalesce(spark.sparkContext.defaultParallelism)
-    )
+    return _plant_dups(base, "words")
 
 
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -563,32 +559,11 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle recomputes the full exact pair set, so a green row
     proves LSH recall 1.0 at the threshold on this corpus (r=2 rows x
     32 bands => miss probability ~1e-14 per 0.8-pair)."""
-    cfg = MinHashConfig(num_hashes=64, bands=32)
-    corpus = _dup_corpus(spark, sf_dir)
-    sigs = minhash_fingerprints(corpus, cfg)
-    cand = lsh_candidate_pairs(sigs, cfg, with_est=False)
-    # r6: hashed shingle sets from the Arrow kernel (8-byte elements;
-    # intersect/union SIZES equal the string form — certified) —
-    # the repartition doubles as the anti-inlining materialization
-    words = shingle_hash_table(
-        _dup_corpus_words(spark, sf_dir)
-    ).repartition(spark.sparkContext.defaultParallelism)
-    j = (
-        cand.join(
-            words.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            words.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= 0.8)
+    return near_dup_pairs(
+        _dup_corpus(spark, sf_dir),
+        _dup_corpus_words(spark, sf_dir),
+        MinHashConfig(num_hashes=64, bands=32),
+        0.8,
     )
 
 
@@ -634,42 +609,14 @@ def _dup_group_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dup_group_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sonar_spark.operators.fingerprint import connected_components
-
-    cfg = MinHashConfig(num_hashes=64, bands=32)
     corpus = _dup_corpus(spark, sf_dir)
-    sigs = minhash_fingerprints(corpus, cfg)
-    cand = lsh_candidate_pairs(sigs, cfg, with_est=False)
-    # r6: hashed shingle sets (the minhash_dedup rationale)
-    words = shingle_hash_table(
-        _dup_corpus_words(spark, sf_dir)
-    ).repartition(spark.sparkContext.defaultParallelism)
-    j = cand.join(
-        words.select(
-            F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-        ),
-        "doc_a",
-    ).join(
-        words.select(
-            F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-        ),
-        "doc_b",
+    pairs = near_dup_pairs(
+        corpus,
+        _dup_corpus_words(spark, sf_dir),
+        MinHashConfig(num_hashes=64, bands=32),
+        0.8,
     )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast(
-        "double"
-    ) / F.size(F.array_union("sh_a", "sh_b"))
-    pairs = j.select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("__j")
-    ).where(F.col("__j") >= 0.8)
-    cc = connected_components(pairs)
-    return (
-        corpus.select("doc_id")
-        .join(cc.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("comp", F.col("doc_id")).alias("component"),
-        )
-    )
+    return near_dup_components(corpus, pairs)
 
 
 def q_curation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1086,34 +1033,12 @@ def q_compare_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats columns).  Fully DuckDB-oracle-backed: the oracle
     recomputes the exact pair set, the frame-feature doc stats, and
     the weighted cosine blend."""
-    cfg = MinHashConfig(num_hashes=64, bands=32)
-    corpus = _dup_corpus(spark, sf_dir)
-    sigs = minhash_fingerprints(corpus, cfg)
-    cand = lsh_candidate_pairs(sigs, cfg, with_est=False)
-    # r6: hashed shingle sets (the minhash_dedup rationale)
-    words = shingle_hash_table(
-        _dup_corpus_words(spark, sf_dir)
-    ).repartition(spark.sparkContext.defaultParallelism)
-    jp = (
-        cand.join(
-            words.select(
-                F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            words.select(
-                F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-            ),
-            "doc_b",
-        )
+    verified = near_dup_pairs(
+        _dup_corpus(spark, sf_dir),
+        _dup_corpus_words(spark, sf_dir),
+        MinHashConfig(num_hashes=64, bands=32),
+        0.8,
     )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast(
-        "double"
-    ) / F.size(F.array_union("sh_a", "sh_b"))
-    verified = jp.select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("__j")
-    ).where(F.col("__j") >= 0.8)
     # both directions in ONE pass over `verified` (a union of two
     # selects would re-evaluate the whole LSH+shingle subtree twice)
     sym = verified.select(
@@ -1135,30 +1060,7 @@ def q_compare_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprints exactly; the LSH/shingle pruning above runs on the
     # token-id corpus, which only affects the candidate set that the
     # exact-Jaccard verification pins down either way
-    # r6: _par so the frame kernel below runs at session parallelism
-    # (the coalesce after the union caps the 3-branch fan-out)
-    lbase = to_token_length_table(
-        _par(spark, _t(spark, sf_dir, "documents"))
-    )
-    ldups = lbase.where(
-        (F.col("doc_id").cast("long") % 10 == 0) & (F.col("n_tok") > 3)
-    ).select(
-        F.concat(F.col("doc_id"), F.lit("_dup")).alias("doc_id"),
-        F.slice(F.col("tokens"), 1, F.col("n_tok") - 3).alias("tokens"),
-        (F.col("n_tok") - 3).alias("n_tok"),
-        F.col("source"),
-    )
-    lcopies = lbase.where(F.col("doc_id").cast("long") % 10 == 5).select(
-        F.concat(F.col("doc_id"), F.lit("_copy")).alias("doc_id"),
-        "tokens",
-        "n_tok",
-        "source",
-    )
-    lcorpus = (
-        lbase.unionByName(ldups)
-        .unionByName(lcopies)
-        .coalesce(spark.sparkContext.defaultParallelism)
-    )
+    lcorpus = _dup_corpus(spark, sf_dir, to_token_length_table)
     # r6: _explicit_doc_stats consumes only the energy+moments
     # families — prune the kernel to them
     feats = frame_features_arrow(

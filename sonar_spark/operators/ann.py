@@ -350,7 +350,7 @@ def allpairs_cosine(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    threshold: float = 0.4,
+    threshold: float | None = 0.4,
     directed: bool = False,
 ) -> DataFrame:
     """All-pairs cosine similarity above a threshold — the exact
@@ -371,7 +371,9 @@ def allpairs_cosine(
     the zero-denominator -> 0.0 guard of distance.go:48-70.
 
     Output: (id_a, id_b, s) with id_a < id_b, s >= threshold, s RAW
-    (caller rounds at its quantization boundary).  directed=True
+    (caller rounds at its quantization boundary).  threshold=None
+    keeps every pair: a -1.0 floor would drop anti-parallel pairs
+    whose computed cosine rounds to just below -1.0.  directed=True
     emits LEFT x ALL instead (id_a from the left side only, every
     id_b != id_a) — the anchors-bounded candidate shape
     hard_negatives consumes when the left side is pre-filtered."""
@@ -420,9 +422,11 @@ def allpairs_cosine(
             with np.errstate(divide="ignore", invalid="ignore"):
                 s = np.where(denom > 0, dots / denom, 0.0)
             if directed:
-                mask = (lid[:, None] != rid[None, :]) & (s >= threshold)
+                mask = lid[:, None] != rid[None, :]
             else:
-                mask = (lid[:, None] < rid[None, :]) & (s >= threshold)
+                mask = lid[:, None] < rid[None, :]
+            if threshold is not None:
+                mask &= s >= threshold
             ii, jj = np.nonzero(mask)
             # chunked yields: one low-threshold block can qualify
             # millions of pairs, and a single yielded frame becomes a
@@ -471,7 +475,7 @@ def hard_negatives_allpairs(
     positive at 0.4.  Fusing the rank reduction into the kernel emits
     exactly the <= k output rows per anchor — no pair row ever leaves
     the task.  Equivalence to hard_negatives(allpairs_cosine(
-    threshold=-1)) is certified by tests/test_negatives.py::
+    threshold=None)) is certified by tests/test_negatives.py::
     test_hard_negatives_kernel_equals_windowed.
 
     Output: query_id, rank (int), neighbor_id, cosine_sim (6dp via

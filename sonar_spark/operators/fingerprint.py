@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import kernels
 from ..config import MinHashConfig
+from ..functions.arrays import jaccard_exact
 
 _SIG_SCHEMA = (
     "doc_id string, source string, n_tok int, minhash array<long>, "
@@ -318,6 +319,53 @@ def connected_components(
             break
     sym.unpersist()
     return labels.select("node", "comp")
+
+
+def near_dup_pairs(
+    tokens: DataFrame, words: DataFrame, cfg: MinHashConfig, threshold: float
+) -> DataFrame:
+    """The near-duplicate pair chain every dedup consumer shares:
+    MinHash signatures over the token table -> banded-LSH candidates
+    (ONE shuffle on the band key) -> exact Jaccard of the hashed
+    word-k-shingle sets, joined back for the survivors only.
+
+    tokens: the token table (doc_id, tokens, n_tok, source); words:
+    (doc_id, words array<string>) over the same doc ids.  Output
+    (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard rounded to
+    6 dp, >= threshold.  With num_hashes=64, bands=32 (r=2 rows per
+    band) the LSH miss probability is ~1e-14 per 0.8-pair, so the
+    result equals the exact all-pairs set (the minhash_dedup oracle
+    certifies it)."""
+    sigs = minhash_fingerprints(tokens, cfg)
+    cand = lsh_candidate_pairs(sigs, cfg, with_est=False)
+    # the repartition doubles as the anti-inlining materialization:
+    # the shingle kernel runs once per doc, not once per join side
+    sh = shingle_hash_table(words, k=cfg.k_shingle).repartition(
+        words.sparkSession.sparkContext.defaultParallelism
+    )
+    j = cand.join(
+        sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
+        "doc_a",
+    ).join(
+        sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
+        "doc_b",
+    )
+    jac = F.round(jaccard_exact(F.col("sh_a"), F.col("sh_b")), 6)
+    return j.select("doc_a", "doc_b", jac.alias("jaccard")).where(
+        F.col("jaccard") >= threshold
+    )
+
+
+def near_dup_components(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(doc_id, component) for every doc_id of `ids`: connected
+    components of the near-dup pair graph (component = the minimum
+    reachable doc id); docs in no pair are their own component."""
+    cc = connected_components(pairs).withColumnRenamed("node", "doc_id")
+    return (
+        ids.select("doc_id")
+        .join(cc, "doc_id", "left")
+        .select("doc_id", F.coalesce("comp", F.col("doc_id")).alias("component"))
+    )
 
 
 def winnow_fingerprints(
@@ -953,11 +1001,7 @@ def incremental_dedup(
         binv = bs.select("b_id", F.explode("b_sh").alias("g"))
         cinv = cs.select("c_id", F.explode("c_sh").alias("g"))
         cand = binv.join(cinv, "g").select("b_id", "c_id").distinct()
-    jac = F.round(
-        F.size(F.array_intersect("b_sh", "c_sh")).cast("double")
-        / F.size(F.array_union("b_sh", "c_sh")),
-        6,
-    )
+    jac = F.round(jaccard_exact(F.col("b_sh"), F.col("c_sh")), 6)
     verified = (
         cand.join(bs, "b_id")
         .join(cs, "c_id")

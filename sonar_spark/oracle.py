@@ -266,6 +266,42 @@ def jaccard_exact(a, b) -> float:
     return len(sa & sb) / u if u else 0.0
 
 
+def near_dup_pairs_bruteforce(words_by_id: dict, threshold: float, k: int = 4) -> dict:
+    """{(a, b): jaccard} over ALL doc pairs a < b whose word-k-shingle
+    STRING sets have round(Jaccard, 6) >= threshold.  Shingles at
+    positions 1..max(n-k+1, 1): a doc shorter than k words is one
+    shingle."""
+    sh = {
+        d: {" ".join(w[i : i + k]) for i in range(max(len(w) - k + 1, 1))}
+        for d, w in words_by_id.items()
+    }
+    ids = sorted(sh)
+    out = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            j = round(jaccard_exact(sh[a], sh[b]), 6)
+            if j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
+def components_union_find(ids, pairs) -> dict:
+    """{id: smallest id of its connected component} (union-find)."""
+    parent = {x: x for x in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:  # every root is its set's minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in ids}
+
+
 def xcorr_naive(a, b, max_lag):
     """Time-domain zero-normalized CC, plain loops."""
     a = [float(x) for x in a]

@@ -4,12 +4,15 @@ curation composites (langid / quality / near-dup grouping / keep-drop
 policy) into the operational job shape a 100 TB corpus actually runs:
 
 - **Phase 1 (corpus-global, write-once):** the near-dup LABEL table
-  (MinHash -> banded LSH -> exact shingle-Jaccard verify -> connected
-  components).  Dedup is inherently corpus-global — a duplicate pair
-  can span any two buckets — so it cannot ride the per-bucket resume
-  loop; instead it lands once under <out>/labels with an atomic
-  directory rename (the FeatureStore convention) and every later run
-  (and every resume) reuses it.  At scale this is the one
+  (MinHash -> banded LSH -> exact Jaccard over hashed word-4-shingle
+  sets -> connected components) — the same chain as the
+  minhash_dedup / dedup_groups queries
+  (operators.fingerprint.near_dup_pairs + near_dup_components).
+  Dedup is inherently corpus-global — a duplicate pair can span any
+  two buckets — so it cannot ride the per-bucket resume loop;
+  instead it lands once under <out>/labels with an atomic directory
+  rename (the FeatureStore convention) and every later run (and
+  every resume) reuses it.  At scale this is the one
   shuffle-heavy stage: one band-key exchange + candidate-bounded
   verify joins + O(log d) pointer-jumping rounds.
 
@@ -51,26 +54,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sonar_spark.config import MinHashConfig
-from sonar_spark.functions.text import detect_language, quality_score
+from sonar_spark.functions.text import (
+    detect_language,
+    quality_score,
+    to_token_table,
+)
 from sonar_spark.operators.fingerprint import (
-    connected_components,
-    lsh_candidate_pairs,
-    minhash_fingerprints,
+    near_dup_components,
+    near_dup_pairs,
 )
 from sonar_spark.plans.pipeline import BucketResult, bucket_of
-
-
-def _shingles(words, k: int = 4):
-    """k-token shingles as strings (space-joined) — the exact-verify
-    unit (the minhash_dedup convention)."""
-    n = F.size(words)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.array_join(F.slice(words, i, k), " "),
-        ),
-    ).otherwise(F.array(F.array_join(words, " ")))
 
 
 @dataclass
@@ -157,56 +150,14 @@ class CurationJob:
         if os.path.exists(os.path.join(self.labels_dir, "_SUCCESS")):
             return spark.read.parquet(self.labels_dir)
 
-        from sonar_spark.functions.text import to_token_table
-
         words = docs.select(
             F.col("doc_id").cast("string").alias("doc_id"),
             F.split(F.trim(F.col("text")), r"\s+").alias("words"),
         )
-        tok = to_token_table(docs)
-        sigs = minhash_fingerprints(tok, self.minhash_cfg)
-        cand = lsh_candidate_pairs(sigs, self.minhash_cfg, with_est=False).select(
-            "doc_a", "doc_b"
+        pairs = near_dup_pairs(
+            to_token_table(docs), words, self.minhash_cfg, self.policy.jaccard
         )
-        sh = words.select(
-            "doc_id", _shingles(F.col("words")).alias("sh")
-        ).repartition(
-            max(8, docs.sparkSession.sparkContext.defaultParallelism)
-        )
-        j = cand.join(
-            sh.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("sh").alias("sh_a"),
-            ),
-            "doc_a",
-        ).join(
-            sh.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("sh").alias("sh_b"),
-            ),
-            "doc_b",
-        )
-        jac = F.size(F.array_intersect("sh_a", "sh_b")).cast(
-            "double"
-        ) / F.size(F.array_union("sh_a", "sh_b"))
-        pairs = j.select(
-            "doc_a", "doc_b", F.round(jac, 6).alias("__j")
-        ).where(F.col("__j") >= self.policy.jaccard)
-        cc = connected_components(pairs)
-        labels = (
-            words.select("doc_id")
-            .join(
-                cc.withColumnRenamed("node", "doc_id"),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce("comp", F.col("doc_id")).alias(
-                    "component"
-                ),
-            )
-        )
+        labels = near_dup_components(words, pairs)
         tmp = f"{self.labels_dir}.tmp-{os.getpid()}"
         labels.write.mode("overwrite").parquet(tmp)
         if os.path.exists(self.labels_dir):  # lost a race; ours works

@@ -209,3 +209,44 @@ def test_ivfpq_index_and_recall(spark, sf_dir):
         rank_of = {i: r for r, (_, i) in enumerate(d_all)}
         pcts.extend(rank_of[n] / len(d_all) for n in nbrs)
     assert np.mean(pcts) < 0.2, np.mean(pcts)  # measured ~0.08
+
+
+def test_allpairs_cosine_no_threshold_keeps_antiparallel(spark, tmp_path):
+    """threshold=None keeps EVERY pair.  Anti-parallel pairs (v, -v)
+    whose computed cosine rounds to just below -1.0 are the case a
+    -1.0 floor used as "no threshold" silently dropped."""
+    import pandas as pd
+
+    from sonar_spark.operators.ann import allpairs_cosine
+
+    def kernel_cos(a, b):  # the kernel's ascending-dim arithmetic
+        dot = na = nb = 0.0
+        for x, y in zip(a, b):
+            dot += x * y
+            na += x * x
+            nb += y * y
+        return dot / (np.sqrt(na) * np.sqrt(nb))
+
+    rng = np.random.default_rng(11)
+    below = [
+        v for v in rng.standard_normal((400, 8)) if kernel_cos(v, -v) < -1.0
+    ][:3]
+    assert len(below) == 3
+    vecs = [x for v in below for x in (v, -v)]
+    path = str(tmp_path / "emb.parquet")
+    pd.DataFrame(
+        {"vec_id": np.arange(len(vecs)), "embedding": [v.tolist() for v in vecs]}
+    ).to_parquet(path)
+    emb = spark.read.parquet(path)
+    n = len(vecs)
+    got = {
+        (r["id_a"], r["id_b"]): r["s"]
+        for r in allpairs_cosine(emb, path, threshold=None).collect()
+    }
+    assert set(got) == {(i, j) for i in range(n) for j in range(i + 1, n)}
+    for i in range(0, n, 2):
+        assert got[(i, i + 1)] == kernel_cos(vecs[i], vecs[i + 1]) < -1.0
+    directed = allpairs_cosine(
+        emb.where(F.col("vec_id") == 0), path, threshold=None, directed=True
+    ).collect()
+    assert sorted(r["id_b"] for r in directed) == list(range(1, n))

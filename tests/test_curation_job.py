@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sonar_spark import oracle
 from sonar_spark.plans.curation import CurationJob, CurationPolicy
 
 WORDS = [
@@ -32,6 +33,14 @@ def _docs(spark):
         base = rows[i][1].split()
         if len(base) > 6:
             rows.append((1000 + i, " ".join(base[:-1]), "sdup"))
+    # short docs are one clamped shingle each: an identical pair and a
+    # shorter doc that matches neither
+    rows += [(2000 + i, t, "sshort") for i, t in enumerate(
+        ["lazy dog joy", "lazy dog joy", "lazy dog"]
+    )]
+    # 5 shingles vs the first 4 of them: Jaccard exactly 0.8
+    rows += [(2003, "the quick brown fox jumps over the joy", "sedge"),
+             (2004, "the quick brown fox jumps over the", "sedge")]
     return spark.createDataFrame(
         rows, "doc_id long, text string, source string"
     )
@@ -113,6 +122,13 @@ def test_curation_job_decision_semantics(spark, tmp_path):
             n_dup_components += 1
     # the planted near-dups must group (and only canonicals survive)
     assert n_dup_components >= 4
+    # components are exactly those of the brute-force pair set over
+    # STRING word-4-shingles (the job verifies on hashed shingles)
+    words = {str(r["doc_id"]): r["text"].split() for r in docs.collect()}
+    pairs = oracle.near_dup_pairs_bruteforce(words, 0.8)
+    assert {d: r["component"] for d, r in dec.items()} == (
+        oracle.components_union_find(words, pairs)
+    )
     kept = {r["doc_id"] for r in job.kept(spark).collect()}
     assert kept == {d for d, r in dec.items() if r["keep"]}
     assert all(dec[d]["is_canonical"] for d in kept)

@@ -211,30 +211,8 @@ def test_connected_components_random_graphs(spark):
         ]
         if not edges:
             continue
-        # union-find reference
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        want = {}
-        for a, b in edges:
-            want[a] = min(want.get(a, a), find(a))
-            want[b] = min(want.get(b, b), find(b))
-        # canonical: min node id of the component
-        comp_min = {}
-        for x in want:
-            r = find(x)
-            comp_min[r] = min(comp_min.get(r, x), x)
-        want = {x: comp_min[find(x)] for x in want}
+        nodes = {x for e in edges for x in e}
+        want = oracle.components_union_find(nodes, edges)
 
         from sonar_spark.operators.fingerprint import (
             connected_components,
@@ -248,6 +226,68 @@ def test_connected_components_random_graphs(spark):
             for r in connected_components(df).collect()
         }
         assert got == want, trial
+
+
+def _near_dup_words():
+    """Random docs over a 60-word vocab (some shorter than 4 words)
+    plus, for every 5th doc of >= 8 words, a near-dup (last word
+    dropped: Jaccard (n-4)/(n-3) >= 0.8), a cut copy (second half
+    dropped: below 0.5) and an exact copy; plus two identical and one
+    different short doc (one clamped shingle each)."""
+    rng = np.random.default_rng(13)
+    docs = {}
+    for i in range(60):
+        n = int(rng.integers(1, 30))
+        docs[f"d{i:03d}"] = [f"w{j}" for j in rng.integers(0, 60, size=n)]
+    for i in range(0, 60, 5):
+        w = docs[f"d{i:03d}"]
+        if len(w) >= 8:
+            docs[f"d{i:03d}_dup"] = w[:-1]
+            docs[f"d{i:03d}_cut"] = w[: len(w) // 2]
+            docs[f"d{i:03d}_copy"] = list(w)
+    docs["s1"] = docs["s2"] = ["w1", "w2"]
+    docs["s3"] = ["w1", "w2", "w3"]
+    return docs
+
+
+def test_near_dup_pairs_equals_bruteforce(spark):
+    """The shared pair chain (MinHash -> LSH -> hashed-shingle exact
+    Jaccard) returns exactly the brute-force STRING-shingle pair set,
+    and its components equal a union-find over those pairs."""
+    from sonar_spark.functions.text import to_token_table
+    from sonar_spark.operators.fingerprint import (
+        near_dup_components,
+        near_dup_pairs,
+    )
+
+    words = _near_dup_words()
+    docs = spark.createDataFrame(
+        [(d, " ".join(w), "web") for d, w in words.items()],
+        "doc_id string, text string, source string",
+    )
+    wdf = docs.select(
+        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words")
+    )
+    pairs = near_dup_pairs(
+        to_token_table(docs), wdf, MinHashConfig(num_hashes=64, bands=32), 0.8
+    ).persist()
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
+    want = oracle.near_dup_pairs_bruteforce(words, 0.8)
+    assert set(got) == set(want)
+    for p, j in want.items():
+        assert got[p] == pytest.approx(j, abs=1e-6), p
+    # every planted kind is exercised
+    assert want[("s1", "s2")] == 1.0 and ("s1", "s3") not in want
+    assert any(b.endswith("_dup") and j < 1.0 for (_, b), j in want.items())
+    assert any(b.endswith("_copy") for _, b in want)
+    assert not any(b.endswith("_cut") for _, b in want)
+
+    comps = {
+        r["doc_id"]: r["component"]
+        for r in near_dup_components(wdf, pairs).collect()
+    }
+    assert comps == oracle.components_union_find(words, want)
+    pairs.unpersist()
 
 
 # ------------------------------------------------------- winnowing

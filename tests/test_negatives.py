@@ -178,7 +178,7 @@ def test_hard_negatives_directed_equals_undirected(spark, sf_dir):
 
     path = f"{sf_dir}/embeddings.parquet"
     emb = spark.read.parquet(path)
-    und = allpairs_cosine(emb, path, threshold=-1.0).select(
+    und = allpairs_cosine(emb, path, threshold=None).select(
         "id_a", "id_b", "s"
     )
     a = sorted(
@@ -191,7 +191,7 @@ def test_hard_negatives_directed_equals_undirected(spark, sf_dir):
         .distinct()
     )
     cand = allpairs_cosine(
-        emb.join(anchors, "vec_id"), path, threshold=-1.0, directed=True
+        emb.join(anchors, "vec_id"), path, threshold=None, directed=True
     ).select("id_a", "id_b", "s")
     b = sorted(
         map(
@@ -207,7 +207,7 @@ def test_hard_negatives_directed_equals_undirected(spark, sf_dir):
 def test_hard_negatives_kernel_equals_windowed(spark, sf_dir):
     """The r6 fused kernel (rank reduction inside the block
     nested-loop task) must reproduce the windowed operator over the
-    full threshold=-1 pair table bit-for-bit — including 6dp
+    full threshold=None pair table bit-for-bit — including 6dp
     rounding and the (s desc, neighbor asc) raw-double tie-break."""
     from sonar_spark.operators.ann import (
         allpairs_cosine,
@@ -217,7 +217,7 @@ def test_hard_negatives_kernel_equals_windowed(spark, sf_dir):
 
     path = f"{sf_dir}/embeddings.parquet"
     emb = spark.read.parquet(path)
-    und = allpairs_cosine(emb, path, threshold=-1.0).select(
+    und = allpairs_cosine(emb, path, threshold=None).select(
         "id_a", "id_b", "s"
     )
     a = sorted(

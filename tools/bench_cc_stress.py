@@ -41,38 +41,18 @@ from tools.bench_lsh_stress import build  # noqa: E402
 def run_pairs(spark: SparkSession, sf_dir: str, m: int) -> dict:
     """Multiplied-corpus near-dup grouping: LSH -> exact verify ->
     CC; returns pair count, CC rounds, and stage walls."""
-    import __spark_entry__ as E
     from sonar_spark.config import MinHashConfig
     from sonar_spark.operators.fingerprint import (
         connected_components,
-        lsh_candidate_pairs,
-        minhash_fingerprints,
+        near_dup_pairs,
     )
 
     corpus, _lcorpus, wcorpus = build(spark, sf_dir, m)
     n_docs = corpus.count()  # corpus materialization outside the clock
     t0 = time.time()
-    cfg = MinHashConfig(num_hashes=64, bands=32)
-    sigs = minhash_fingerprints(corpus, cfg)
-    cand = lsh_candidate_pairs(sigs, cfg).select("doc_a", "doc_b")
-    words = wcorpus.select(
-        "doc_id", E._shingles4(F.col("words")).alias("sh")
-    ).repartition(8)
-    jp = cand.join(
-        words.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-        "doc_a",
-    ).join(
-        words.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-        "doc_b",
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    verified = (
-        jp.select("doc_a", "doc_b", F.round(jac, 6).alias("__j"))
-        .where(F.col("__j") >= 0.8)
-        .persist()
-    )
+    verified = near_dup_pairs(
+        corpus, wcorpus, MinHashConfig(num_hashes=64, bands=32), 0.8
+    ).persist()
     n_pairs = verified.count()
     t_pairs = time.time() - t0
 

@@ -104,33 +104,14 @@ def run_once(spark: SparkSession, sf_dir: str, m: int) -> dict:
     from sonar_spark.config import MinHashConfig
     from sonar_spark.operators.compare import compare_topk
     from sonar_spark.operators.features import frame_features_arrow
-    from sonar_spark.operators.fingerprint import (
-        lsh_candidate_pairs,
-        minhash_fingerprints,
-    )
+    from sonar_spark.operators.fingerprint import near_dup_pairs
     from sonar_spark.config import FrameConfig
 
     corpus, lcorpus, wcorpus = build(spark, sf_dir, m)
     n_docs = corpus.count()  # corpus materialization outside the clock
     t0 = time.time()
-    cfg = MinHashConfig(num_hashes=64, bands=32)
-    sigs = minhash_fingerprints(corpus, cfg)
-    cand = lsh_candidate_pairs(sigs, cfg).select("doc_a", "doc_b")
-    words = wcorpus.select(
-        "doc_id", E._shingles4(F.col("words")).alias("sh")
-    ).repartition(8)
-    jp = cand.join(
-        words.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-        "doc_a",
-    ).join(
-        words.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-        "doc_b",
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    verified = jp.select("doc_a", "doc_b", F.round(jac, 6).alias("__j")).where(
-        F.col("__j") >= 0.8
+    verified = near_dup_pairs(
+        corpus, wcorpus, MinHashConfig(num_hashes=64, bands=32), 0.8
     )
     sym = verified.select(
         F.explode(
